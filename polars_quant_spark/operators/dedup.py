@@ -445,17 +445,30 @@ def connected_components(
     cover diameters past 10⁴ (d_k ≈ 3·2^(k-2); asserted on a 300-link
     chain in tests/test_pipeline_ops.py).
 
+    The graph is read ONCE into a checkpointed ARC list: one ``explode``
+    per pair emits (a,b), (b,a) and the self-loops (a,a), (b,b). Because
+    every node is its own neighbor, a plain round is one join (arcs ⋈
+    labels on v) and one ``groupBy("u")`` that yields both the new label
+    (min over the closed neighborhood, which already includes the node's
+    own label) and the old one (the label carried by the self-loop arc) —
+    no separate node frame, no labels ⋈ proposals join. Round 0 joins
+    nothing: every label is still its own id, so the arc's v IS its label.
+    Duplicate arcs (repeated pairs, one self-loop per incident pair) only
+    repeat terms of a min.
+
     Correctness of probing the PLAIN step: at a fixed point of the plain
     neighbor-min update, every edge (u,v) has label(u)=label(v) (else the
     larger side would lower), i.e. labels are uniform per component =
     min reachable id — the true answer — so the jump can never lower a
     label the plain probe called converged. Both steps only lower labels
-    (``least`` with the current label). Each round is lineage-truncated
+    (the plain min runs over the node's own label too; the jump takes
+    ``least`` with it). Each round is lineage-truncated
     (``localCheckpoint``) so plans stay constant-size.
     Returns (node, component). Each call updates the module-level
-    ``last_cc_stats`` dict ({"rounds", "jump_rounds", "converged"}) —
-    observability for the scale smokes (VERDICT r12 #5 asked for the
-    observed jump-round count at 1024×), zero cost on the plan."""
+    ``last_cc_stats`` dict ({"rounds", "jump_rounds", "converged",
+    "round_s", "jump_s"}) — observability for the scale smokes (VERDICT
+    r12 #5 asked for the observed jump-round count at 1024×), zero cost
+    on the plan."""
     import time as _time
 
     jsc = edges.sparkSession.sparkContext._jsc
@@ -478,18 +491,27 @@ def connected_components(
     def _pinned_ids() -> set[int]:
         return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
 
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    )
-    sym = sym.localCheckpoint()
-    labels = sym.select("u").distinct().select("u", F.col("u").alias("label"))
+    a, b = F.col(src), F.col(dst)
+    arcs = edges.select(
+        F.explode(
+            F.array(
+                *(
+                    F.struct(x.alias("u"), y.alias("v"))
+                    for x, y in ((a, b), (b, a), (a, a), (b, b))
+                )
+            )
+        ).alias("_arc")
+    ).select("_arc.u", "_arc.v")
+    arcs = arcs.localCheckpoint()
+    # identity labels: lazy, read only by a max_iter=0 fall-through
+    labels = arcs.select("u").distinct().select("u", F.col("u").alias("label"))
     # Round-pin hygiene (r11 review): each round eagerly checkpoints 1-2
     # frames; once round i's final checkpoint is materialized (the
-    # convergence count forces it), round i-1's pins are dead weight — a
+    # convergence probe forces it), round i-1's pins are dead weight — a
     # long-lived session calling this in a corpus loop would otherwise
     # accumulate ~2·rounds pinned RDDs per call. Track the ids created per
     # round and drop the previous round's after the current one lands.
-    # (sym and the final round's pins are never dropped — the returned
+    # (arcs and the final round's pins are never dropped — the returned
     # frame reads them.) Like session.released(), this diffs the
     # session-GLOBAL persistent-RDD id set: single-threaded driver
     # assumed (ADVICE r11) — concurrent pins from other driver threads
@@ -499,15 +521,20 @@ def connected_components(
     for i in range(max_iter):
         t_round = _time.time()
         before = _pinned_ids()
-        nbr = sym.join(
-            labels.select(F.col("u").alias("v"), F.col("label").alias("vlabel")), "v"
-        )
-        proposed = nbr.groupBy("u").agg(F.min("vlabel").alias("nl"))
-        new = labels.join(proposed, "u", "left").select(
-            "u", F.least(F.coalesce("nl", "label"), F.col("label")).alias("newl"), "label"
+        if i == 0:
+            nbr = arcs.select("u", "v", F.col("v").alias("vlabel"))
+        else:
+            nbr = arcs.join(
+                labels.select(F.col("u").alias("v"), F.col("label").alias("vlabel")),
+                "v",
+            )
+        new = nbr.groupBy("u").agg(
+            # a null id never joins a label, so it keeps a null one
+            F.min(F.when(F.col("u").isNotNull(), F.col("vlabel"))).alias("newl"),
+            F.min(F.when(F.col("u") == F.col("v"), F.col("vlabel"))).alias("label"),
         )
         new = new.localCheckpoint()
-        done = new.where(F.col("newl") < F.col("label")).limit(1).count() == 0
+        done = new.where(F.col("newl") < F.col("label")).isEmpty()
         last_cc_stats["rounds"] = i + 1
         t_jump = _time.time()
         if not done and i >= 2:

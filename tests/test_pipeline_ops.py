@@ -110,6 +110,71 @@ def test_connected_components_deep_chain(spark):
     labels = {r["u"]: r["component"] for r in comp}
     assert len(labels) == n
     assert set(labels.values()) == {0}
+    st = dedup.last_cc_stats
+    assert (st["rounds"], st["jump_rounds"], st["converged"]) == (10, 7, True)
+
+
+def test_connected_components_job_count(spark):
+    """Locks the Spark job count of the 300-link chain's components call
+    (it is eager: every round checkpoints and probes). The arc list with
+    self-loops read once, one join and one aggregate per plain round and a
+    single-job ``isEmpty`` probe start 68 jobs here; the previous body (a
+    union of two pair reads, a node ``distinct``, a labels ⋈ proposals
+    join and a ``limit(1).count()`` probe) started 100 on the same input."""
+    n = 300
+    pdf = pd.DataFrame({"id_a": list(range(n - 1)), "id_b": list(range(1, n))})
+    edges = spark.createDataFrame(pdf)
+    sc = spark.sparkContext
+    group = "test_connected_components_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.connected_components(edges)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert dedup.last_cc_stats["rounds"] == 10
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 68
+
+
+def _union_find_components(pairs):
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [],
+        [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3)],
+        [(1, 1), (2, 2), (2, 3), (4, 4)],
+        [(5, i) for i in (1, 2, 3, 4, 6, 7, 8)],
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 13), (13, 14)],
+        [(7, 3)],
+    ],
+    ids=["empty", "dup_and_reversed", "self_loops", "star", "two_paths", "single_edge"],
+)
+def test_connected_components_matches_union_find(spark, pairs):
+    """Every node gets the min id of its component, as a pure-Python
+    union-find computes it, on the degenerate inputs the arc list must
+    handle: no edges, repeated and reversed pairs, self-loops, a star, two
+    disjoint paths and one edge."""
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    comp = dedup.connected_components(edges).collect()
+    labels = {r["u"]: r["component"] for r in comp}
+    assert len(comp) == len(labels)
+    assert labels == _union_find_components(pairs)
+    assert dedup.last_cc_stats["converged"]
 
 
 def test_sliding_window_chain_fires_pointer_jumps(spark):
